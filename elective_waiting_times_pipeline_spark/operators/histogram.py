@@ -7,25 +7,27 @@ given per-group weekly wait-band counts (band b covers (b-1, b] weeks),
     distribution — NOT percentile_approx (different semantics);
   * number ≤ T weeks   = sum of counts over bands 1..T;
   * number ≥ T weeks   = total − that prefix sum;
-  * rates = round(100 × count / total, 1);
+  * rates = round(count / total × 100, 1);
   * small-sample suppression: all stats NULL when total < 20
     (`2.R:233`, `2.R:277-298`).
 
-Spark-first design: one hash aggregation collapses the fact rows to
-(group × band) — partial map-side combine makes this the only shuffle —
-then a window cumulative sum over the (tiny) per-group band axis, then
-one more hash agg extracts every quantile and threshold with
-conditional aggregates. No UDAF, no Python in the hot path; the whole
-kernel is whole-stage-codegen'd expressions, so it survives a 100 TB
-fact table as long as the group count does (band axis is ≤ ~110 rows
-per group after the first agg).
+Spark-first design: the kernel, ``band_vector_stats``, is row-local.
+Each row carries one group's band vector (band ascending); the running
+totals are built once per row and every quantile, threshold count, rate
+and suppression is read off them by index.  The caller makes the
+vectors in one hash aggregation (map-side partial, one shuffle):
+``histogram_stats`` collects a (group × band × cnt) histogram,
+``plans/rtt.py`` sums the wide band columns under grouping sets.  No
+Window, no second aggregate, no UDF; the vector is bounded by the
+number of distinct bands (≤ ~110), so the kernel scales with the group
+count, not the fact table.
 """
 
 from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -98,8 +100,88 @@ def band_histogram(
     return df.groupBy(*group_cols, band_col).agg(agg.cast("long").alias("cnt"))
 
 
-def _suppress(total: Column, min_total: int, stat: Column) -> Column:
-    return F.when(total >= min_total, stat)
+def _round1(x: str, half_even: bool) -> str:
+    """SQL rounding the double ``x`` to one decimal place.
+
+    HALF_UP is Spark's ``round``.  Half-even is R's and Python's
+    ``round(x, 1)``: correctly rounded from the binary value of ``x``
+    (51 / 80 * 100 = 63.74999999999999 → 63.7), ties to even only when
+    ``x`` is exactly a midpoint (26.25 → 26.2).  Spark's ``bround``
+    rounds the decimal string Java prints for ``x`` instead, so
+    1 / 2000 * 100 (printed 0.05, stored just above it) goes to 0.0.
+    Here ``x`` is compared exactly with the midpoint (2k+1)/20 above its
+    tenth k: 20x = 16x + 4x is split into the double sum ``s`` and its
+    exact error ``e`` (both multiples are exact, so Fast2Sum applies).
+    ``floor(x * 10)`` can only overshoot k when x lies just under a
+    tenth, which then rounds to that tenth anyway."""
+    if not half_even:
+        return f"round({x}, 1)"
+    k = f"floor({x} * 10)"
+    s = f"({x} * 16D + {x} * 4D)"
+    e = f"({x} * 4D - ({s} - {x} * 16D))"
+    m = f"(2 * {k} + 1)"
+    up = f"{s} > {m} OR ({s} = {m} AND ({e} > 0 OR ({e} = 0 AND {k} % 2 = 1)))"
+    return f"(({k} + IF({up}, 1, 0)) / 10D)"
+
+
+def band_vector_stats(
+    df: DataFrame,
+    vec: str,
+    keep: Sequence[str],
+    quantiles: Iterable[float] = (0.50, 0.92, 0.95),
+    le_thresholds: Iterable[int] = (18,),
+    ge_thresholds: Iterable[int] = (52,),
+    min_total: int = 20,
+    half_even: bool = False,
+) -> DataFrame:
+    """The kernel: histogram statistics of one band vector per row.
+
+    ``vec`` is an ARRAY<STRUCT<band, cnt>> in ascending band order; NULL
+    counts count as 0.  Row-local: no shuffle, Window or aggregate.
+    The running totals are built once, with a leading 0, so the total
+    is the last one, a quantile's crossing band is at the index given
+    by the count of running totals below q × total, and the ≤ T count
+    is the running total after the bands ≤ T.
+
+    Output: ``keep``, total_patients, weeks_{q*100} (INT),
+    number_{T}_or_less / rate_{T}wks_or_less per ≤-threshold and
+    number_{T}_or_more / rate_{T}wks_or_more per ≥-threshold; all but
+    the total NULL when total < ``min_total``.  Rates are
+    ``round(100 * x / total, 1)`` HALF_UP, or with ``half_even`` R's
+    ``round(x / total * 100, 1)`` (see ``_round1``).
+    """
+    kept = [f"`{c}`" for c in keep]
+    run = df.selectExpr(
+        *kept,
+        f"aggregate(`{vec}`, array(0L), (c, x) -> concat(c, array(element_at(c, -1) + coalesce(CAST(x.cnt AS BIGINT), 0L)))) AS _cum",
+        f"transform(`{vec}`, x -> x.band) AS _band",
+    ).selectExpr(*kept, "_cum", "_band", "element_at(_cum, -1) AS total_patients")
+
+    def when_kept(sql: str) -> str:
+        return f"CASE WHEN total_patients >= {min_total} THEN {sql} END"
+
+    def upto(thr: int) -> str:
+        return f"element_at(_cum, size(filter(_band, b -> b <= {thr})) + 1)"
+
+    weeks = {
+        f"weeks_{int(round(q * 100))}": f"CAST(element_at(_band, greatest(size(filter(_cum, c -> c < {q!r}D * total_patients)), 1)) - 1 AS INT)"
+        for q in quantiles
+    }
+    counts = [(f"number_{t}_or_less", f"rate_{t}wks_or_less", upto(t)) for t in le_thresholds]
+    counts += [(f"number_{t}_or_more", f"rate_{t}wks_or_more", f"total_patients - {upto(t)}") for t in ge_thresholds]
+    ratio = "CAST({0} AS DOUBLE) / total_patients * 100D" if half_even else "100D * {0} / total_patients"
+    stats = run.selectExpr(
+        *kept,
+        "total_patients",
+        *[f"{when_kept(sql)} AS {name}" for name, sql in weeks.items()],
+        *[f"{when_kept(sql)} AS {name}" for name, _, sql in counts],
+    ).selectExpr(
+        *kept,
+        "total_patients",
+        *weeks,
+        *[c for name, rate, _ in counts for c in (name, f"{ratio.format(name)} AS {rate}")],
+    )
+    return stats.withColumns({rate: F.expr(_round1(rate, half_even)) for _, rate, _ in counts})
 
 
 def histogram_stats(
@@ -114,52 +196,15 @@ def histogram_stats(
     half_even: bool = False,
 ) -> DataFrame:
     """Quantiles + threshold counts/rates + suppression from a
-    (group × band × cnt) histogram.
+    (group × band × cnt) histogram: one hash aggregation collects each
+    group's bands into a sorted vector, then ``band_vector_stats``.
 
-    Output columns:
-      total_patients,
-      weeks_{q*100} per quantile (INT, NULL-suppressed),
-      number_{T}_or_less / rate_{T}wks_or_less per ≤-threshold,
-      number_{T}_or_more / rate_{T}wks_or_more per ≥-threshold.
-
-    ``half_even=True`` rounds the rate columns half-to-even (R/Python
-    ``round`` semantics — needed for golden parity with the reference,
-    e.g. 26.25 → 26.2); the default HALF_UP matches SQL-engine ROUND.
+    ``half_even=True`` rounds rates as R and Python ``round`` do (golden
+    parity with the reference, e.g. 26.25 → 26.2, 51/80 → 63.7); the
+    default HALF_UP matches SQL-engine ROUND.
     """
-    _round = F.bround if half_even else F.round
     grp = list(group_cols)
-    w_cum = (
-        Window.partitionBy(*grp)
-        .orderBy(band_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    vec = hist.groupBy(*grp).agg(
+        F.expr(f"array_sort(collect_list(named_struct('band', `{band_col}`, 'cnt', `{cnt_col}`)))").alias("_vec")
     )
-    w_all = Window.partitionBy(*grp)
-    cum = F.sum(cnt_col).over(w_cum)
-    total = F.sum(cnt_col).over(w_all)
-    enriched = hist.select(
-        *grp,
-        F.col(band_col).alias("_band"),
-        F.col(cnt_col).alias("_cnt"),
-        cum.alias("_cum"),
-        total.alias("_total"),
-    )
-
-    aggs: list[Column] = [F.max("_total").alias("total_patients")]
-    t = F.max("_total")
-    for q in quantiles:
-        name = f"weeks_{int(round(q * 100))}"
-        crossing = F.min(F.when(F.col("_cum") >= q * F.col("_total"), F.col("_band")))
-        aggs.append(_suppress(t, min_total, (crossing - 1).cast("int")).alias(name))
-    for thr in le_thresholds:
-        n_le = F.coalesce(F.sum(F.when(F.col("_band") <= thr, F.col("_cnt"))), F.lit(0))
-        aggs.append(_suppress(t, min_total, n_le.cast("long")).alias(f"number_{thr}_or_less"))
-        aggs.append(
-            _suppress(t, min_total, _round(100.0 * n_le / t, 1)).alias(f"rate_{thr}wks_or_less")
-        )
-    for thr in ge_thresholds:
-        n_ge = t - F.coalesce(F.sum(F.when(F.col("_band") <= thr, F.col("_cnt"))), F.lit(0))
-        aggs.append(_suppress(t, min_total, n_ge.cast("long")).alias(f"number_{thr}_or_more"))
-        aggs.append(
-            _suppress(t, min_total, _round(100.0 * n_ge / t, 1)).alias(f"rate_{thr}wks_or_more")
-        )
-    return enriched.groupBy(*grp).agg(*aggs)
+    return band_vector_stats(vec, "_vec", grp, quantiles, le_thresholds, ge_thresholds, min_total, half_even)

@@ -34,13 +34,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def key_bucket_set(dim: DataFrame, dim_key: str, m: int = 1 << 20) -> DataFrame:
-    """The broadcastable filter: distinct xxhash64(key) % m buckets."""
-    return dim.select(
-        F.pmod(F.xxhash64(F.col(dim_key)), F.lit(m)).alias("__rf_bucket")
-    ).distinct()
-
-
 def _plausibly_saturates(dim: DataFrame, m: int, max_fill: float) -> bool:
     """Zero-cost pre-gate for the adaptive bypass: Catalyst's
     sizeInBytes estimate (free — no job) upper-bounds the dim's key

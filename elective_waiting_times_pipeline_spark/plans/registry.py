@@ -35,13 +35,6 @@ def query(name: str, oracle: str | None = None, headline: bool = False):
     return deco
 
 
-def dec2(c) -> F.Column:
-    """Cast to DECIMAL(18,2) — order-independent, but ~10× slower than
-    the scaled-long path below (boxed decimal arithmetic per row).
-    Kept for wide-decimal needs; hot aggregates use sl2/sum2."""
-    return (F.col(c) if isinstance(c, str) else c).cast("decimal(18,2)")
-
-
 def sl2(c) -> F.Column:
     """2-dp value as a scaled long: floor(x*100 + 0.5). Exact for any
     source with ≤2 decimal places (x*100 is then integer ± ε, so the

@@ -6,30 +6,28 @@ region, 2.R:659-812 imd): a scalar function per (month, geo, specialty,
 pathway, IS-bucket) combination, swept over an expand.grid — O(grid)
 full-table rescans. Here the whole grid is computed at once:
 
-    fact rows ──melt──▶ (group cols, band, cnt)
-        GROUP BY GROUPING SETS ((geo,is),(geo),(is),()) × fixed keys
-        ──window cumsum over band──▶ quantile/threshold extraction
+    fact rows (group keys, scalars, band columns _gt_1.._gt_B)
+        GROUP BY GROUPING SETS ((geo,is),(geo),(is),()) × fixed keys,
+        summing the scalars and every band into one band vector
+        ──row-local──▶ operators.histogram.band_vector_stats
 
 The ENGLAND pseudo-group (2.R:148-150: overwrite geo with a constant)
 and the independent∈{0,1,2=All} branch (2.R:344-353) are exactly the
 four grouping sets. Spark's Expand operator replicates each row 4× into
-one shuffle — versus the reference's |grid| rescans.
-
-Semantics replicated exactly:
+one map-side partial aggregation and one shuffle — versus the
+reference's |grid| rescans. Quantiles, threshold counts, rates
+(R's half-even ``round``) and <20 suppression are the shared kernel's;
+this module adds only what is RTT-specific:
   * pathway mapping 2.R:69-76 (5 RTT.Part.Description values);
   * specialty renames 2.R:81-90;
   * NONC (private patients) excluded 2.R:318;
   * totals by pathway 2.R:189-228: complete* = band total + unknown
-    clock start; incomplete* = band total; newRTT = Total.All only;
-  * quantile = (first band with cumsum ≥ q × total.nonmiss) − 1, where
-    total.nonmiss is the known-start band total (2.R:237-249);
-  * number.18.or.less = cumsum[18]; number.52.or.more = total.nonmiss −
-    sum(bands 1..52); rates = round(x/total.nonmiss·100, 1) (2.R:256-261);
-  * suppression: stats NULL when total.nonmiss < 20 or type = newRTT
-    (2.R:233, 277-298); total.patients itself is never suppressed.
-
-Output columns use the reference's golden names (monthyear, geo, ...,
-`total.patients`, `number.18.or.less`, `weeks.50`, ...).
+    clock start; incomplete* = band total; newRTT = Total.All only.
+    The kernel's total is the known-start band total (total.nonmiss,
+    2.R:237-249), which also decides suppression;
+  * newRTT rows keep only their total (2.R:277-298);
+  * the reference's golden column names (monthyear, geo, ...,
+    `total.patients`, `number.18.or.less`, `weeks.50`, ...).
 """
 
 from __future__ import annotations
@@ -38,6 +36,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from elective_waiting_times_pipeline_spark.operators.histogram import band_vector_stats, wide_to_band_long
 
 PATHWAY_MAP = {
     "Incomplete Pathways": "incomplete",
@@ -80,13 +80,16 @@ def clean_specialty(col: str = "Treatment.Function.Name") -> F.Column:
 
 def prepare_fact(fact: DataFrame, gt_cols: Sequence[str] | None = None) -> tuple[DataFrame, DataFrame]:
     """From the wide RTT extract (FIXTURES.md §1 schema) derive:
-      rows — one row per fact row with group keys + scalar measures;
-      long — melted (group keys, band, cnt) with NULL counts dropped.
+      rows — one row per fact row: group keys, scalar measures and the
+             band counts as ``_gt_1`` … ``_gt_B`` (band b = b-th Gt column);
+      long — melted (group keys, band, cnt) with NULL counts dropped,
+             built lazily; ``dashboard_stats`` does not read it.
     Both filtered to NONC-excluded (2.R:318) and pathway != 'NA'.
     """
     if gt_cols is None:
         gt_cols = [c for c in fact.columns if c.startswith("Gt")]
-    base = (
+    bands = [f"_gt_{i + 1}" for i in range(len(gt_cols))]
+    rows = (
         fact.filter(F.col("`Commissioner.Org.Code`") != "NONC")
         .select(
             F.col("monthyr").alias("monthyear"),
@@ -100,24 +103,12 @@ def prepare_fact(fact: DataFrame, gt_cols: Sequence[str] | None = None) -> tuple
                 "unknown_start"
             ),
             F.coalesce(F.col("`Total.All`").cast("long"), F.lit(0)).alias("total_all"),
-            *[F.col(f"`{c}`").cast("long").alias(f"_gt_{i + 1}") for i, c in enumerate(gt_cols)],
+            *[F.col(f"`{c}`").cast("long").alias(b) for c, b in zip(gt_cols, bands)],
         )
         .filter(F.col("pathway") != "NA")
     )
-    keys = [
-        "monthyear",
-        "provider",
-        "ccg",
-        "ccg_name",
-        "pathway",
-        "specialty",
-        "is_provider",
-    ]
-    rows = base.select(*keys, "unknown_start", "total_all")
-    from elective_waiting_times_pipeline_spark.operators.histogram import wide_to_band_long
-
-    long = wide_to_band_long(base, [f"_gt_{i + 1}" for i in range(len(gt_cols))], keys)
-    return rows, long
+    keys = ["monthyear", "provider", "ccg", "ccg_name", "pathway", "specialty", "is_provider"]
+    return rows, wide_to_band_long(rows, bands, keys)
 
 
 def dashboard_stats(
@@ -128,105 +119,47 @@ def dashboard_stats(
     all_label: str = "ENGLAND",
 ) -> DataFrame:
     """All (month × geo ∪ ENGLAND × specialty × pathway × IS ∪ All)
-    dashboard statistics in one grouping-sets pass.
+    dashboard statistics in one grouping-sets pass over ``rows``.
 
     geo_col selects the variant: 'provider' (2.R:127), 'ccg' (2.R:314),
     or any dimension joined onto the fact (region 2.R:492, IMD quintile
-    2.R:659). Output: FIXTURES.md §4 summary schema.
+    2.R:659); the key is labelled as a string. ``long`` is accepted for
+    the ``prepare_fact`` call shape ``dashboard_stats(rows, long)`` and
+    ignored. Output: FIXTURES.md §4 summary schema.
     """
-    spark = rows.sparkSession
     fixed = ["monthyear", "specialty", "pathway"]
-    tag = f"_rtt_{geo_col}"
-    rows.createOrReplaceTempView(f"{tag}_rows")
-    long.createOrReplaceTempView(f"{tag}_long")
-
-    fixed_sql = ", ".join(fixed)
-
-    def _sets(extra: str = "") -> str:
-        e = f", {extra}" if extra else ""
-        return (
-            f"GROUPING SETS (({fixed_sql}{e}, {geo_col}, is_provider), "
-            f"({fixed_sql}{e}, {geo_col}), ({fixed_sql}{e}, is_provider), ({fixed_sql}{e}))"
-        )
-
-    # Group spine + scalar measures (unknown clock start, Total.All).
-    spine = spark.sql(
-        f"""
-        SELECT {fixed_sql},
-               CASE WHEN grouping({geo_col}) = 1 THEN '{all_label}' ELSE {geo_col} END AS geo,
-               CASE WHEN grouping(is_provider) = 1 THEN 'All'
-                    WHEN is_provider = 1 THEN 'IS' ELSE 'Non-IS' END AS independent,
-               SUM(unknown_start) AS unknown_start,
-               SUM(total_all) AS total_all
-        FROM {tag}_rows
-        GROUP BY {_sets()}
-        """
+    vec = ", ".join(f"named_struct('band', {c[4:]}, 'cnt', SUM({c}))" for c in rows.columns if c.startswith("_gt_"))
+    sets = [[*fixed, geo_col, "is_provider"], [*fixed, geo_col], [*fixed, "is_provider"], fixed]
+    groups = rows.groupingSets(sets, *fixed, geo_col, "is_provider").agg(
+        F.expr(f"CASE WHEN grouping(`{geo_col}`) = 1 THEN '{all_label}' ELSE CAST(`{geo_col}` AS STRING) END").alias(
+            "geo"
+        ),
+        F.expr(
+            "CASE WHEN grouping(is_provider) = 1 THEN 'All' WHEN is_provider = 1 THEN 'IS' ELSE 'Non-IS' END"
+        ).alias("independent"),
+        F.sum("unknown_start").alias("unknown_start"),
+        F.sum("total_all").alias("total_all"),
+        F.expr(f"array({vec})").alias("_vec"),
     )
-
-    # Band histogram per group (same grouping sets, band appended),
-    # then cumulative-sum quantile machinery per group.
-    hist = spark.sql(
-        f"""
-        SELECT {fixed_sql},
-               CASE WHEN grouping({geo_col}) = 1 THEN '{all_label}' ELSE {geo_col} END AS geo,
-               CASE WHEN grouping(is_provider) = 1 THEN 'All'
-                    WHEN is_provider = 1 THEN 'IS' ELSE 'Non-IS' END AS independent,
-               band, SUM(cnt) AS cnt
-        FROM {tag}_long
-        GROUP BY {_sets("band")}
-        """
-    )
-    grp = fixed + ["geo", "independent"]
-    hist.createOrReplaceTempView(f"{tag}_hist")
-    grp_sql = ", ".join(grp)
-    q_exprs = ",\n".join(
-        f"MIN(CASE WHEN cum >= {q} * nonmiss THEN band END) - 1 AS `weeks.{int(round(q * 100))}`"
-        for q in quantiles
-    )
-    bandstats = spark.sql(
-        f"""
-        WITH cum AS (
-          SELECT {grp_sql}, band, cnt,
-                 SUM(cnt) OVER (PARTITION BY {grp_sql} ORDER BY band) AS cum,
-                 SUM(cnt) OVER (PARTITION BY {grp_sql}) AS nonmiss
-          FROM {tag}_hist
-        )
-        SELECT {grp_sql},
-               MAX(nonmiss) AS nonmiss,
-               {q_exprs},
-               COALESCE(SUM(CASE WHEN band <= 18 THEN cnt END), 0) AS `number.18.or.less`,
-               MAX(nonmiss) - COALESCE(SUM(CASE WHEN band <= 52 THEN cnt END), 0) AS `number.52.or.more`
-        FROM cum
-        GROUP BY {grp_sql}
-        """
-    )
-
-    out = spine.join(bandstats, on=grp, how="left")
-    nonmiss = F.coalesce(F.col("nonmiss"), F.lit(0))
+    keep = [*fixed, "geo", "independent", "unknown_start", "total_all"]
+    stats = band_vector_stats(groups, "_vec", keep, quantiles, (18,), (52,), min_total=20, half_even=True)
+    # Totals by pathway (2.R:189-228); total_patients is the known-start
+    # band total, which also decides suppression. newRTT keeps only its total.
     total = (
-        F.when(F.col("pathway").isin("completeadmitted", "completenonadmitted"), nonmiss + F.col("unknown_start"))
-        .when(F.col("pathway") == "newRTT", F.col("total_all"))
-        .otherwise(nonmiss)
+        "CASE WHEN pathway IN ('completeadmitted', 'completenonadmitted') THEN total_patients + unknown_start "
+        "WHEN pathway = 'newRTT' THEN total_all ELSE total_patients END"
     )
-    keep = (nonmiss >= 20) & (F.col("pathway") != "newRTT")
-
-    def _supp(c: F.Column) -> F.Column:
-        return F.when(keep, c)
-
-    week_cols = [f"weeks.{int(round(q * 100))}" for q in quantiles]
-    return out.select(
+    kernel = ["number_18_or_less", "rate_18wks_or_less", "number_52_or_more", "rate_52wks_or_more"]
+    kernel += [f"weeks_{int(round(q * 100))}" for q in quantiles]
+    return stats.selectExpr(
         "monthyear",
-        F.col("geo").alias(geo_col),
+        f"geo AS `{geo_col}`",
         "specialty",
-        F.col("pathway").alias("type"),
+        "pathway AS type",
         "independent",
-        total.cast("long").alias("total.patients"),
-        _supp(F.col("`number.18.or.less`")).cast("long").alias("number.18.or.less"),
-        # bround: R round() is half-to-even (26.25 → 26.2, not 26.3)
-        _supp(F.bround(100.0 * F.col("`number.18.or.less`") / nonmiss, 1)).alias("rate.18wks.or.less"),
-        _supp(F.col("`number.52.or.more`")).cast("long").alias("number.52.or.more"),
-        _supp(F.bround(100.0 * F.col("`number.52.or.more`") / nonmiss, 1)).alias("rate.52wks.or.more"),
-        *[_supp(F.col(f"`{w}`")).cast("int").alias(w) for w in week_cols],
+        f"CAST({total} AS BIGINT) AS `total.patients`",
+        # the golden names are the kernel's with dots
+        *[f"IF(pathway = 'newRTT', NULL, {c}) AS `{c.replace('_', '.')}`" for c in kernel],
     )
 
 

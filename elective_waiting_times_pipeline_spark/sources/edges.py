@@ -178,13 +178,6 @@ def read_orc(spark, path: str, schema=None, **options):
     return r.orc(path, **options)
 
 
-def sanitize_output_names(df: DataFrame) -> DataFrame:
-    """Rename columns to the reference's golden CSV form (dots kept;
-    anything Spark-illegal is already legal since we use backticks) —
-    placeholder for format-level tweaks; currently identity."""
-    return df
-
-
 def read_jsonl(
     spark,
     path: str,

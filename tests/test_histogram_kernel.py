@@ -88,3 +88,28 @@ def test_rate_rounding_half_even_vs_half_up(spark):
     ev = _stats_for(spark, counts, le_thresholds=(18,), ge_thresholds=(), half_even=True)
     assert up.rate_18wks_or_less == 26.3
     assert ev.rate_18wks_or_less == 26.2
+
+
+def test_rate_half_even_rounds_the_double_like_r(spark):
+    # R and Python round the binary value of x / n * 100 (21/80 -> 26.2
+    # is test_rate_rounding_half_even_vs_half_up):
+    # 51/80*100 = 63.74999999999999 -> 63.7; 1/2000*100 = 0.05000000000000000277 -> 0.1
+    for x, n, want in ((51, 80, 63.7), (1, 2000, 0.1)):
+        r = _stats_for(spark, {10: x, 60: n - x}, le_thresholds=(18,), ge_thresholds=(52,), half_even=True)
+        assert r.rate_18wks_or_less == want, (x, n)
+        assert r.rate_52wks_or_more == round((n - x) / n * 100, 1), (x, n)
+
+
+def test_rate_half_even_matches_python_round_for_every_count(spark):
+    ns = (80, 400, 2000, 4000)
+    rows = [Row(grp=f"{n}/{x}", band=b, cnt=c) for n in ns for x in range(n + 1) for b, c in ((10, x), (60, n - x))]
+    out = histogram_stats(
+        spark.createDataFrame(rows), ["grp"], quantiles=(), le_thresholds=(18,), ge_thresholds=(), half_even=True
+    ).collect()
+    assert len(out) == sum(n + 1 for n in ns)
+    bad = []
+    for r in out:
+        n, x = map(int, r.grp.split("/"))
+        if r.rate_18wks_or_less != round(x / n * 100, 1):
+            bad.append((x, n, r.rate_18wks_or_less))
+    assert not bad, bad[:10]

@@ -63,9 +63,28 @@ def test_cube_uses_expand_not_rescans(spark, sf_dir):
 def test_histogram_kernel_single_scan_and_partial_aggs(spark, sf_dir):
     assert _n_scans(_plan(spark, "histogram_quantile", sf_dir)) == 1
     simple = _plan(spark, "histogram_quantile", sf_dir, mode="simple")
-    # quantile extraction rides partial+final hash aggregation (the
-    # conditional-min crossing search is map-side combinable)
-    assert "partial_min" in simple and "partial_sum" in simple
+    # the band histogram and its per-group band vector are both
+    # map-side combined; quantiles are read off the vector row-locally
+    assert "partial_count" in simple and "partial_collect_list" in simple
+    assert "Window" not in simple
+
+
+def test_rtt_dashboard_one_shuffle_no_window_generate_join(spark):
+    """The ccg dashboard is one grouping-sets aggregation feeding the
+    row-local kernel: one shuffle, and no band melt, window or join."""
+    from elective_waiting_times_pipeline_spark.plans import rtt
+    from tests.rtt_fixture import make_fixture
+
+    rows, long = rtt.prepare_fact(spark.createDataFrame(make_fixture()))
+    stats = rtt.dashboard_stats(rows, long, geo_col="ccg")
+    stats.write.format("noop").mode("overwrite").save()
+    # final plan only — AQE's toString repeats nodes in the trailing
+    # "== Initial Plan ==" section
+    plan = stats._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bExchange hashpartitioning", plan)) == 1, plan
+    assert "Exchange" not in plan.replace("Exchange hashpartitioning", ""), plan
+    for node in ("Window", "Generate", "Join"):
+        assert node not in plan, plan
 
 
 def test_minhash_single_corpus_scan(spark, sf_dir):

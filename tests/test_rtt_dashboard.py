@@ -109,6 +109,29 @@ def test_region_variant_via_dim_join(spark, fact):
     assert _same(r["rate.18wks.or.less"], want["rate.18wks.or.less"])
 
 
+def test_integer_geo_key_is_labelled(spark, fact):
+    """An integer geo key (the IMD quintile ``lookups.imd_deciles``
+    emits) gets the string ENGLAND label, not a cast of 'ENGLAND'."""
+    from pyspark.sql import functions as F
+
+    quintile = {f"P{i:02d}": i % 5 + 1 for i in range(6)}
+    dim = spark.createDataFrame([(f"{p} TRUST", q) for p, q in quintile.items()], "provider string, imd_quintile int")
+    rows, long = rtt.prepare_fact(fact)
+    rows, long = rows.join(F.broadcast(dim), "provider"), long.join(F.broadcast(dim), "provider")
+    out = rtt.dashboard_stats(rows, long, geo_col="imd_quintile").toPandas()
+    got = {
+        (r["monthyear"], r["imd_quintile"], r["specialty"], r["type"], r["independent"]): r
+        for _, r in out.iterrows()
+    }
+    pdf = make_fixture()
+    pdf["imd_quintile"] = pdf["Provider.Org.Code"].map(lambda p: str(quintile[p]))
+    for geo in ("ENGLAND", "1"):
+        key = ("Apr20", geo, "Total", "incomplete", "All")
+        want = oracle_stats(pdf, *key, geo_field="imd_quintile")
+        for c in STAT_COLS:
+            assert _same(got[key][c], want[c]), f"{key} {c}: {got[key][c]!r} != {want[c]!r}"
+
+
 def test_provider_variant_runs(spark, fact):
     rows, long = rtt.prepare_fact(fact)
     out = rtt.dashboard_stats(rows, long, geo_col="provider")
