@@ -77,7 +77,7 @@ def doubled_avg_rank(
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    cuts = range_cut_points(g, value_col, n_buckets, sample_rows=4096)
+    cuts = range_cut_points(g, value_col, n_buckets)
     pre = ordered_prefix(
         g,
         [F.col(value_col).asc()],
@@ -132,7 +132,7 @@ def spearman_rho(df: DataFrame, x: str, y: str, n_buckets: int = 64) -> DataFram
     # twice. A shared cut list is sound: cut points only steer
     # parallelism (any monotone bucketing yields the same exact
     # ranks), and equal-mass cuts over the UNION axis are taken from
-    # the collapsed axis itself (sample_rows over ≤|ax|+|ay| rows).
+    # the collapsed axis itself (a hash sample of ≤|ax|+|ay| rows).
     # Requires x and y to be union-compatible; both callers cast to
     # long. The axis is localCheckpoint'd (O(distinct) rows — the
     # bounded class), so the two filter branches and the offsets agg
@@ -151,7 +151,7 @@ def spearman_rho(df: DataFrame, x: str, y: str, n_buckets: int = 64) -> DataFram
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    cuts = range_cut_points(g, "_v", n_buckets, sample_rows=4096)
+    cuts = range_cut_points(g, "_v", n_buckets)
     pre = ordered_prefix(
         g,
         [F.col("_v").asc()],
@@ -245,7 +245,7 @@ def mann_whitney_u(
         )
         .localCheckpoint(eager=False)
     )
-    cuts = range_cut_points(g, value_col, n_buckets, sample_rows=4096)
+    cuts = range_cut_points(g, value_col, n_buckets)
     pre = ordered_prefix(
         g,
         [F.col(value_col).asc()],

@@ -33,14 +33,18 @@ HEX_BITS = 4  # hex chars of the digest used ⇒ 16^4 = 65,536 buckets
 HEX_SPACE = 16**HEX_BITS
 
 
-def hash_hex_prefix(key: Column | str, salt: str = "") -> Column:
-    """First `HEX_BITS` hex chars of md5(key || salt) — the uniform
-    [0, HEX_SPACE) draw behind all sampling/splitting here."""
+def _salted_md5(key: Column | str, salt: str) -> Column:
     c = F.col(key) if isinstance(key, str) else key
     s = c.cast("string")
     if salt:
         s = F.concat(s, F.lit(salt))
-    return F.substring(F.md5(s), 1, HEX_BITS)
+    return F.md5(s)
+
+
+def hash_hex_prefix(key: Column | str, salt: str = "") -> Column:
+    """First `HEX_BITS` hex chars of md5(key || salt) — the uniform
+    [0, HEX_SPACE) draw behind all sampling/splitting here."""
+    return F.substring(_salted_md5(key, salt), 1, HEX_BITS)
 
 
 def hex_threshold(fraction: float) -> str:
@@ -131,6 +135,17 @@ def stratified_hash_sample(
     return df.filter(keep)
 
 
+def _hash_order(
+    df: DataFrame, key: Column | str, salt: str
+) -> tuple[DataFrame, list[Column], Column]:
+    """`df` with `_h` = md5(key || salt), the order (`_h`, key) and its
+    `ordered_prefix` bucket: the first hash byte, a range prefix of the
+    order (256 uniform buckets, skew-free without a sampling pass)."""
+    c = F.col(key) if isinstance(key, str) else key
+    hashed = df.withColumn("_h", _salted_md5(c, salt))
+    return hashed, [F.col("_h"), c], F.conv(F.substring("_h", 1, 2), 16, 10)
+
+
 def hash_order_prefix(
     df: DataFrame,
     key: Column | str,
@@ -141,102 +156,25 @@ def hash_order_prefix(
     out_prefix: str = "cum_weight",
     offsets_from_source: bool = False,
 ) -> DataFrame:
-    """Distributed rank — and, with `weight`, inclusive running total —
-    under the deterministic order (md5(key || salt), key), optionally
-    partitioned by `group_cols` (e.g. per-source corpus quotas).
-
-    A naive ROW_NUMBER()/SUM() OVER (ORDER BY hash) is a
-    single-partition window — the whole table (or the whole hot group)
-    through one task. The scalable shape is the classic distributed
-    rank:
-      1. bucket = first 2 hex chars of the hash — a RANGE prefix of
-         the order, so bucket boundaries respect it (256 uniform
-         buckets; the hash makes them skew-free by construction, no
-         sampling pass needed);
-      2. row_number (+ running weight) within each (group, bucket) —
-         a 256-way parallel window even inside ONE hot group;
-      3. per-(group, bucket) counts/weight sums (≤256 rows per group)
-         → running offsets via a window over the tiny bucket axis →
-         broadcast back (|groups|·256 rows — thousands of sources is
-         still well under any broadcast threshold);
-      4. position = bucket offset + within-bucket row number (same
-         for the weight prefix).
-    Two shuffles of the data (bucket exchange + window sort) — the
-    same cost as any global sort — plus a tiny side plan. The salt
-    re-rolls the order without touching the key.
-
-    The offsets side aggregates the WINDOWED stream, so the source is
-    scanned exactly once: the window shuffle is written once and read
-    by both the join probe side and the tiny offsets agg. (Before r8
-    the offsets branch grouped the pre-window stream, whose
-    partial-agg-below-exchange plan defeated exchange reuse — an
-    expensive upstream was computed twice unless callers
-    localCheckpointed it first.)
-    """
-    c = F.col(key) if isinstance(key, str) else key
-    s = c.cast("string")
-    if salt:
-        s = F.concat(s, F.lit(salt))
-    from pyspark.sql import Window
-
-    gcols = list(group_cols)
-    bucketed = df.withColumn("_h", F.md5(s)).withColumn("_bk", F.substring("_h", 1, 2))
-    w = Window.partitionBy(*gcols, "_bk").orderBy("_h", c)
-    ranked = bucketed.withColumn("_rn", F.row_number().over(w))
-    # offsets aggregate the WINDOWED stream (max(_rn) = bucket count,
-    # max_by(_cw, _rn) = bucket weight total; _rn unique per bucket) —
-    # same single-source-scan rationale as ordered_prefix: a groupBy
-    # on `bucketed` plans its partial agg below a fresh Exchange,
-    # structurally different from the window's Exchange, defeating
-    # reuse and paying a second full pass over the (possibly
-    # expensive) upstream. The agg over the window output is
-    # partition-local — no new exchange.
-    aggs = [F.max("_rn").alias("_n")]
-    src_aggs = [F.count(F.lit(1)).alias("_n")]
-    if weight is not None:
-        wc = F.col(weight) if isinstance(weight, str) else weight
-        ranked = ranked.withColumn(
-            "_cw", F.sum(wc).over(w.rowsBetween(Window.unboundedPreceding, 0))
-        )
-        aggs.append(F.max_by("_cw", "_rn").alias("_ws"))
-        src_aggs.append(F.sum(wc).alias("_ws"))
-    ow = Window.partitionBy(*gcols).orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
-    # `offsets_from_source` trades a second source scan for skipping
-    # the second sort+window over the bucket exchange — see
-    # ordered_prefix; enable only when the source is cheap to rescan
-    # (checkpointed / raw narrow scan). The two scans must AGREE:
-    # a nondeterministic source (rand, monotonically_increasing_id,
-    # uncheckpointed sample) can produce inconsistent offsets.
-    offsets = (
-        bucketed.groupBy(*gcols, "_bk").agg(*src_aggs)
-        if offsets_from_source
-        else ranked.groupBy(*gcols, "_bk").agg(*aggs)
-    ).withColumn(
-        "_off", F.coalesce(F.sum("_n").over(ow), F.lit(0))
-    )
-    if weight is not None:
-        offsets = offsets.withColumn("_woff", F.coalesce(F.sum("_ws").over(ow), F.lit(0)))
-    # null-safe rejoin: a NULL group key is a real group (windows keep
-    # it), so the offsets join must not silently drop its rows — the
-    # group columns come back renamed and compared with eqNullSafe
-    # (still a hashable equi-key, the broadcast join survives)
-    keep = [
-        *[F.col(g).alias(f"_g{i}") for i, g in enumerate(gcols)],
-        F.col("_bk").alias("_obk"),
-        "_off",
-        *(["_woff"] if weight is not None else []),
-    ]
-    cond = F.col("_bk") == F.col("_obk")
-    for i, g in enumerate(gcols):
-        cond = cond & F.col(g).eqNullSafe(F.col(f"_g{i}"))
-    out = ranked.join(F.broadcast(offsets.select(*keep)), cond).withColumn(
-        out_pos, (F.col("_off") + F.col("_rn")).cast("long")
-    )
-    if weight is not None:
-        out = out.withColumn(out_prefix, (F.col("_woff") + F.col("_cw")).cast("long"))
-    drop = ["_h", "_bk", "_rn", "_cw", "_off", "_woff", "_obk"]
-    drop += [f"_g{i}" for i in range(len(gcols))]
-    return out.drop(*drop)
+    """Distributed rank `out_pos` — and, with `weight`, inclusive
+    running total `out_prefix` — under the deterministic order
+    (md5(key || salt), key), optionally partitioned by `group_cols`
+    (e.g. per-source corpus quotas). `ordered_prefix` bucketed by the
+    first hash byte: even one hot group fans across 256 bucket windows
+    instead of one task. The salt re-rolls the order without touching
+    the key; `offsets_from_source` is `ordered_prefix`'s, with its
+    determinism caveat."""
+    hashed, order, bucket = _hash_order(df, key, salt)
+    return ordered_prefix(
+        hashed,
+        order,
+        bucket,
+        group_cols,
+        out_pos=out_pos,
+        weight=weight,
+        out_prefix=out_prefix,
+        offsets_from_source=offsets_from_source,
+    ).drop("_h")
 
 
 def hash_order_position(
@@ -247,7 +185,7 @@ def hash_order_position(
 ) -> DataFrame:
     """Deterministic global training-order shuffle: 1-based contiguous
     `position` of every row under the order (md5(key || salt), key).
-    The ungrouped case of `hash_order_prefix` (see its scale notes)."""
+    The ungrouped case of `hash_order_prefix`."""
     return hash_order_prefix(df, key, (), salt, out_pos=out)
 
 
@@ -255,46 +193,35 @@ def range_cut_points(
     df: DataFrame,
     value: str,
     n_buckets: int = 64,
-    rel_err: float = 0.001,
-    sample_rows: int | None = None,
+    sample_rows: int = 4096,
 ) -> list[float]:
-    """Approximate-quantile cut points splitting `value`'s distribution
-    into ~`n_buckets` equal-mass ranges — the bucketing side of the
-    value-order distributed rank (`ordered_prefix`). The cut points
-    only steer PARALLELISM, never correctness — any monotone bucketing
-    yields the same exact ranks, a degenerate cut list merely loses
-    fan-out.
+    """Cut points splitting `value`'s distribution into ~`n_buckets`
+    equal-mass ranges — the bucketing side of the value-order
+    distributed rank (`ordered_prefix`). The cut points only steer
+    PARALLELISM, never correctness: any monotone bucketing yields the
+    same exact ranks, a degenerate cut list merely loses fan-out.
 
-    Two modes, both one bounded driver-side action:
-    - default: Greenwald-Khanna sketch over the full column (no full
-      sort; memory ~1/rel_err per partition).
-    - `sample_rows=N`: empirical quantiles of the N hash-smallest
-      values (ORDER BY xxhash64(value) LIMIT N → Spark's
-      TakeOrderedAndProject: a size-N bounded heap per partition, no
-      sort shuffle, ≤ N*8 bytes to the driver at any scale).
-      Deterministic under layout/reruns (pure value-hash order), and a
-      4096-row uniform sample pins each cut within ~1.6% rank error —
-      far finer than the 1/64 bucket width needs. Use when the column
-      is already a collapsed axis and the GK pass is measurable
-      overhead."""
+    One bounded driver-side action: empirical quantiles of the
+    `sample_rows` hash-smallest non-NULL values (ORDER BY
+    xxhash64(value) LIMIT N → Spark's TakeOrderedAndProject: a size-N
+    heap per partition, no sort shuffle, ≤ N*8 bytes to the driver at
+    any scale). Deterministic under layout and reruns (pure value-hash
+    order); a 4096-row uniform sample pins each cut within ~1.6% rank
+    error, far finer than a 1/64 bucket width needs."""
     qs = [i / n_buckets for i in range(1, n_buckets)]
     if not qs:  # n_buckets <= 1: one bucket, no cut points
         return []
-    if sample_rows is not None:
-        rows = (
-            df.select(F.col(value).cast("double").alias("_v"))
-            .where(F.col("_v").isNotNull())
-            .orderBy(F.xxhash64("_v"))
-            .limit(sample_rows)
-            .collect()
-        )
-        vals = sorted(r["_v"] for r in rows)
-        if not vals:
-            return []
-        cuts = [vals[min(int(q * len(vals)), len(vals) - 1)] for q in qs]
-        return sorted(set(cuts))
-    cuts = df.approxQuantile(value, qs, rel_err)
-    return sorted(set(cuts))
+    rows = (
+        df.select(F.col(value).cast("double").alias("_v"))
+        .where(F.col("_v").isNotNull())
+        .orderBy(F.xxhash64("_v"))
+        .limit(sample_rows)
+        .collect()
+    )
+    vals = sorted(r["_v"] for r in rows)
+    if not vals:
+        return []
+    return sorted({vals[min(int(q * len(vals)), len(vals) - 1)] for q in qs})
 
 
 def parquet_footer_cuts(
@@ -530,76 +457,52 @@ def ordered_prefix(
     out_prefix: str = "cum_weight",
     out_total: str | None = None,
     out_total_weight: str | None = None,
-    broadcast_offsets: bool = True,
     offsets_from_source: bool = False,
     weights: Sequence[tuple[Column | str, str]] = (),
 ) -> DataFrame:
-    """Distributed rank / running total under an arbitrary VALUE order
-    — the generalization of `hash_order_prefix` from hash orders to
-    any sort whose leading key admits a monotone `bucket` (use
-    `range_bucket` over `range_cut_points` for value orders, or a hash
-    prefix for hash orders). The caller guarantees `bucket` is a
-    monotone non-decreasing function of `order_cols` within each
-    group; ranks are then EXACT regardless of how balanced the buckets
-    are.
+    """Distributed rank / running total under the order `order_cols`,
+    optionally partitioned by `group_cols` — the one bucketed-prefix
+    kernel behind every rank, quantile, trim and split here. The caller
+    guarantees `bucket` is a monotone non-decreasing function of
+    `order_cols` within each group (`range_bucket` over
+    `range_cut_points` for value orders, the first hash byte for hash
+    orders — see `hash_order_prefix`); ranks are then EXACT however
+    balanced the buckets are.
 
-    Same two-shuffle shape as `hash_order_prefix` (see its scale
-    notes): per-(group, bucket) window for the within-bucket
-    row_number / running weight, per-bucket counts -> cumulative
-    offsets via a window over the tiny bucket axis, broadcast back.
-    `out_total` additionally attaches the per-group row count (from
-    the same side relation — no extra pass), which callers like the
-    exact-NTILE curriculum bucketing need; `out_total_weight` does the
-    same for the per-group WEIGHT total (requires `weight`), sparing
-    weighted-quantile callers a separate groupBy pass over `df` plus a
-    totals join. Set
-    `broadcast_offsets=False` when |groups|*|buckets| can exceed the
-    broadcast threshold (e.g. grouping by a high-cardinality key): the
-    offsets join then shuffles on (group, bucket), which the bucket
-    component keeps skew-free.
+    A naive ROW_NUMBER()/SUM() OVER (ORDER BY ...) is a single-task
+    window. Here:
+      1. row_number (+ running weights) within each (group, bucket) —
+         a parallel window even inside one hot group;
+      2. per-(group, bucket) counts / weight sums from the windowed
+         stream (max(_rn), max_by(_cw, _rn): partition-local, no new
+         exchange, the source is scanned once) → exclusive offsets by
+         a window over the tiny bucket axis;
+      3. that side relation is broadcast back and joined null-safely
+         (a NULL group is a real group, as in the window), and
+         position = offset + within-bucket row number (same for each
+         weight prefix).
 
-    `offsets_from_source=True` derives the per-bucket counts/weight
-    sums from a direct hash agg on the PRE-WINDOW stream instead of
-    re-consuming the windowed one. Exchange reuse only dedupes the
-    SHUFFLE WRITE — each consumer of the window exchange still pays
-    its own sort + window, so the default shape sorts the axis twice.
-    The source-agg shape replaces that second sort+window with one
-    map-side-combined agg (tiny shuffle: ≤ |groups|·|buckets| rows per
-    task) at the price of a second source scan — a strict win whenever
-    `df` is localCheckpoint'd or otherwise cheap to rescan (measured
-    2.36 s → 1.98 s on trimmed_mean_price at sf0.1, identical rows).
-    Keep the default when the source embeds an expensive upstream
-    (pack_chunks' tokenize) that a second scan would recompute.
+    Outputs: `out_pos` (1-based rank), `out_prefix` (inclusive running
+    total of `weight`), one inclusive prefix per `weights` (column,
+    out_name) pair — all measures share one bucket exchange, sort and
+    offsets side — and the per-group row count `out_total` / weight
+    total `out_total_weight` (requires `weight`), from the same side
+    relation.
+
+    `offsets_from_source=True` takes the per-bucket counts from a hash
+    aggregate over the PRE-window stream instead, replacing a second
+    sort+window with a map-side-combined agg at the price of a second
+    source scan — use it when `df` is checkpointed or cheap to rescan.
     DETERMINISM: the flag scans `df` TWICE (ranked branch + offsets
     agg); a source embedding nondeterministic expressions (rand,
     monotonically_increasing_id, an uncheckpointed sample) can
-    disagree between the two scans and corrupt the offsets — the flag
-    requires a deterministic or checkpointed source, same as the cost
-    caveat above already steers to.
-
-    `weights` adds EXTRA running totals in the same single pass:
-    each (column, out_name) pair gets its own inclusive prefix under
-    the identical order — one bucket exchange, one sort, one offsets
-    side for ALL of them, where chaining ordered_prefix calls would
-    pay the full machinery per measure (the ks_test_sources shape:
-    cumulative group-A count and cumulative total count in one pass)."""
+    disagree between the two scans and corrupt the offsets."""
     from pyspark.sql import Window
 
     gcols = list(group_cols)
     b = df.withColumn("_bk", bucket.cast("long"))
     w = Window.partitionBy(*gcols, "_bk").orderBy(*order_cols)
-    # row_number is ALWAYS computed (not only when out_pos is asked
-    # for): the offsets side below aggregates the WINDOWED stream —
-    # max(_rn) is the bucket count and max_by(_cw, _rn) the bucket
-    # weight total (_rn is unique within the bucket, so no tie
-    # ambiguity). Aggregating from `ranked` instead of from `b` means
-    # the source is scanned ONCE: a groupBy on `b` plans its partial
-    # aggregation below a fresh Exchange, which is structurally
-    # different from the window's Exchange and defeats reuse — the
-    # pre-r8 shape paid a full second source pass (a second tokenize,
-    # for pack_chunks). The agg over the window output is partition-
-    # local (already hashed on (group, _bk)), so it adds NO exchange;
-    # the one window shuffle is written once and read twice.
+    # row_number is always computed: the offsets side aggregates it
     ranked = b.withColumn("_rn", F.row_number().over(w))
     aggs = [F.max("_rn").alias("_n")]
     src_aggs = [F.count(F.lit(1)).alias("_n")]
@@ -625,7 +528,13 @@ def ordered_prefix(
         if offsets_from_source
         else ranked.groupBy(*gcols, "_bk").agg(*aggs)
     )
-    keep = [*gcols, "_bk"]
+    # the join keys come back renamed: ranked and the side relation
+    # share lineage, and the group keys are compared with eqNullSafe
+    # (still a hashable equi-key, so the broadcast join survives)
+    keep = [
+        *[F.col(g).alias(f"_g{i}") for i, g in enumerate(gcols)],
+        F.col("_bk").alias("_obk"),
+    ]
     if out_pos is not None:
         offsets = offsets.withColumn("_off", F.coalesce(F.sum("_n").over(ow), F.lit(0)))
         keep.append("_off")
@@ -646,10 +555,10 @@ def ordered_prefix(
                 raise ValueError("out_total_weight requires weight")
             offsets = offsets.withColumn("_wtot", F.sum("_ws").over(tw))
             keep.append("_wtot")
-    side = offsets.select(*keep)
-    if broadcast_offsets:
-        side = F.broadcast(side)
-    out = ranked.join(side, [*gcols, "_bk"])
+    cond = F.col("_bk") == F.col("_obk")
+    for i, g in enumerate(gcols):
+        cond = cond & F.col(g).eqNullSafe(F.col(f"_g{i}"))
+    out = ranked.join(F.broadcast(offsets.select(*keep)), cond)
     if out_pos is not None:
         out = out.withColumn(out_pos, (F.col("_off") + F.col("_rn")).cast("long"))
     for _wc, oname, cwn, woffn, _wsn in wlist:
@@ -658,7 +567,8 @@ def ordered_prefix(
         out = out.withColumn(out_total, F.col("_tot").cast("long"))
     if out_total_weight is not None:
         out = out.withColumn(out_total_weight, F.col("_wtot").cast("long"))
-    drop = ["_bk", "_rn", "_off", "_tot", "_wtot"]
+    drop = ["_bk", "_obk", "_rn", "_off", "_tot", "_wtot"]
+    drop += [f"_g{i}" for i in range(len(gcols))]
     drop += [n for _wc, _o, cwn, woffn, _wsn in wlist for n in (cwn, woffn)]
     return out.drop(*drop)
 
@@ -833,28 +743,16 @@ def stratified_exact_split(
     {"train": 800, "val": 100, "test": 100}; permille must sum to
     1000. Cut points compare 1000*position <= cum_permille*n in exact
     integers, so the assignment is reproducible across engines,
-    layouts, and reruns. Rank comes from `hash_order_prefix` — even a
-    single dominant stratum fans across 256 bucket windows. The
-    per-stratum counts are a |strata|-row broadcast."""
+    layouts, and reruns. Rank and per-stratum count come from one
+    hash-ordered `ordered_prefix` pass — even a single dominant
+    stratum fans across 256 bucket windows."""
     permille = list(fractions.items())
     if sum(p for _, p in permille) != 1000:
         raise ValueError("fractions (permille) must sum to 1000")
-    ranked = hash_order_prefix(df, key, strata_cols, salt)
-    strata = list(strata_cols)
-    # counts from the PRE-rank input (the rank branch would otherwise
-    # execute twice), joined null-safely so a NULL stratum keeps its
-    # rows (a plain `on=strata` equi-join silently drops them)
-    counts = df.groupBy(*strata).agg(F.count(F.lit(1)).alias("_n"))
-    # aliased copies avoid self-join column ambiguity (ranked and
-    # counts share df's lineage)
-    counts = counts.select(
-        *[F.col(s).alias(f"_s_{s}") for s in strata], "_n"
-    )
-    cond = None
-    for s in strata:
-        c = F.col(s).eqNullSafe(F.col(f"_s_{s}"))
-        cond = c if cond is None else cond & c
-    joined = ranked.join(F.broadcast(counts), cond).drop(*[f"_s_{s}" for s in strata])
+    hashed, order, bucket = _hash_order(df, key, salt)
+    ranked = ordered_prefix(
+        hashed, order, bucket, strata_cols, out_pos="position", out_total="_n"
+    ).drop("_h")
     cum = 0
     expr: Column | None = None
     for label, p in permille[:-1]:
@@ -863,4 +761,4 @@ def stratified_exact_split(
         expr = F.when(cond, F.lit(label)) if expr is None else expr.when(cond, F.lit(label))
     last = permille[-1][0]
     split = F.lit(last) if expr is None else expr.otherwise(F.lit(last))
-    return joined.withColumn(out, split).drop("_n")
+    return ranked.withColumn(out, split).drop("_n")

@@ -2134,11 +2134,11 @@ def weighted_median_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.floor(F.col("l_quantity") + 0.5).cast("long")).alias("w"))
         .localCheckpoint(eager=False)
     )
-    # cut points from a 4096-row hash sample (bounded heap, no GK pass
-    # over the full axis); the group total weight rides the offsets
+    # cut points from a 4096-row hash sample (bounded heap, no full
+    # pass over the axis); the group total weight rides the offsets
     # side relation, so the checkpoint has exactly two consumers — the
     # sample action that materializes it and the rank plan
-    cuts = S.range_cut_points(v, "val", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(v, "val")
     c = S.ordered_prefix(
         v,
         [F.col("val")],
@@ -2190,7 +2190,7 @@ def pareto_front_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_retailprice", "p_size")
     axis = p.groupBy("p_retailprice").agg(F.max("p_size").alias("msz"))
-    cuts = S.range_cut_points(axis, "p_retailprice", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(axis, "p_retailprice")
     b = axis.withColumn(
         "_bk", S.range_bucket("p_retailprice", cuts).cast("long")
     )
@@ -2398,7 +2398,7 @@ def trimmed_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=False)  # cut-points sample + prefix plan share one agg
     )
-    cuts = S.range_cut_points(v, "val", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(v, "val")
     c = S.ordered_prefix(
         v,
         [F.col("val")],
@@ -2630,7 +2630,7 @@ def winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=False)
     )
-    cuts = S.range_cut_points(v, "val", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(v, "val")
     c = S.ordered_prefix(
         v,
         [F.col("val")],
@@ -2703,7 +2703,7 @@ def monetary_unit_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = li.select(
         "l_orderkey", "l_linenumber", sl2("l_extendedprice").alias("cents")
     ).localCheckpoint(eager=False)  # cut-points sample + prefix plan share one scan
-    cuts = S.range_cut_points(v, "l_orderkey", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(v, "l_orderkey")
     c = S.ordered_prefix(
         v,
         [F.col("l_orderkey"), F.col("l_linenumber")],
@@ -2762,7 +2762,7 @@ def weighted_p90_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.floor(F.col("l_quantity") + 0.5).cast("long")).alias("w"))
         .localCheckpoint(eager=False)
     )
-    cuts = S.range_cut_points(v, "val", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(v, "val")
     c = S.ordered_prefix(
         v,
         [F.col("val")],
@@ -2833,7 +2833,7 @@ def iqr_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=False)  # quartile pass + outlier re-join share it
     )
-    cuts = S.range_cut_points(v, "val", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(v, "val")
     c = S.ordered_prefix(
         v,
         [F.col("val")],
@@ -2901,7 +2901,7 @@ def orderkey_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from elective_waiting_times_pipeline_spark.operators import sampling as S
 
     o = load_table(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("key"))
-    cuts = S.range_cut_points(o, "key", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(o, "key")
     k = S.ordered_prefix(
         o,
         [F.col("key")],

@@ -892,7 +892,7 @@ def pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts = S.parquet_footer_cuts(f"{sf_dir}/documents.parquet", "doc_id", n_buckets=64)
     if cuts is None:
         with_tokens = with_tokens.localCheckpoint(eager=False)
-        cuts = S.range_cut_points(with_tokens, "doc_id", n_buckets=64, sample_rows=4096)
+        cuts = S.range_cut_points(with_tokens, "doc_id")
     return P.chunk_offsets(with_tokens, budget=512, shards=8, id_cuts=cuts)
 
 
@@ -1971,13 +1971,11 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     #      offset, computed with the range-bucket distributed prefix
     #      (ordered_prefix) so even the count-distribution relation
     #      never needs a global window;
-    #   2. within a count group, the 256-way hash-bucketed row_number
-    #      (partition (n, hash byte) — breaks the n=1 mega-tie that
-    #      value-range cuts alone cannot split);
-    #   3. the per-(n, hash-bucket) offsets and the per-n group offsets
-    #      merge on the SMALL side first, so the single vocab-sized
-    #      join keys on (n, bucket) — skew-free by the bucket component
-    #      and AQE-broadcastable when small.
+    #   2. within a count group, the hash-order rank
+    #      (hash_order_prefix grouped by n — its 256 hash buckets break
+    #      the n=1 mega-tie that value-range cuts alone cannot split);
+    #   3. rank = group offset + within-group rank, one join on the
+    #      small per-n relation.
     from elective_waiting_times_pipeline_spark.operators import sampling as S
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1986,20 +1984,13 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(X.tokens("text")).alias("tok"))
         .filter(F.col("tok") != "")
     )
-    # checkpoint the narrow (tok, n) relation: the cut-points action
-    # and the ranked plan would otherwise EACH replay the token
-    # explode + count (same fix as curriculum_order's scored relation)
+    # checkpoint the narrow (tok, n) relation: the cut-points action,
+    # the offsets agg and the ranked plan would otherwise EACH replay
+    # the token explode + count (same fix as curriculum_order's scored
+    # relation)
     cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(eager=False)
-    b = cnt.withColumn("_hh", F.md5("tok")).withColumn(
-        "_bk", F.conv(F.substring("_hh", 1, 2), 16, 10).cast("long")
-    )
-    wiw = Window.partitionBy("n", "_bk").orderBy("_hh", "tok")
-    within = b.withColumn("_rn", F.row_number().over(wiw))
-    cell = b.groupBy("n", "_bk").agg(F.count(F.lit(1)).alias("_cn"))
-    cw = Window.partitionBy("n").orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
-    cell = cell.withColumn("_boff", F.coalesce(F.sum("_cn").over(cw), F.lit(0)))
-    per_n = cell.groupBy("n").agg(F.sum("_cn").alias("_gn"))
-    cuts = S.range_cut_points(per_n, "n", n_buckets=64, sample_rows=4096)
+    per_n = cnt.groupBy("n").agg(F.count(F.lit(1)).alias("_gn"))
+    cuts = S.range_cut_points(per_n, "n")
     goff = S.ordered_prefix(
         per_n,
         [F.col("n").desc()],
@@ -2007,10 +1998,10 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         weight="_gn",
         out_prefix="_cum",
     ).select("n", (F.col("_cum") - F.col("_gn")).alias("_goff"))
-    side = cell.join(goff, "n").select("n", "_bk", (F.col("_goff") + F.col("_boff")).alias("_off"))
     ranked = (
-        within.join(side, ["n", "_bk"])
-        .withColumn("_rank", F.col("_off") + F.col("_rn"))
+        S.hash_order_prefix(cnt, "tok", group_cols=["n"], offsets_from_source=True)
+        .join(goff, "n")
+        .withColumn("_rank", F.col("_goff") + F.col("position"))
         .select(
             F.floor(F.log(F.col("_rank").cast("double")) * 1000 + 0.5).cast("long").alias("lx"),
             F.floor(F.log(F.col("n").cast("double")) * 1000 + 0.5).cast("long").alias("ly"),
@@ -2101,7 +2092,7 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         X.unigram_logprob(docs).select("doc_id", "mean_logprob").localCheckpoint(eager=False)
     )
-    cuts = S.range_cut_points(scored, "mean_logprob", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(scored, "mean_logprob")
     ranked = S.ordered_prefix(
         scored,
         [F.col("mean_logprob").desc(), F.col("doc_id")],
@@ -2292,7 +2283,7 @@ def source_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition per source (sources are few); the sampled cut points
     # keep partition depth ~corpus/64 at any density. Σ i·x rides
     # decimal(38,0): rank·n_chars sums pass int64 at petascale.
-    cuts = S.range_cut_points(docs, "n_chars", n_buckets=64, sample_rows=4096)
+    cuts = S.range_cut_points(docs, "n_chars")
     ranked = S.ordered_prefix(
         docs,
         [F.col("n_chars"), F.col("doc_id")],
@@ -2979,7 +2970,7 @@ def ks_test_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("a").alias("_ca"), F.count(F.lit(1)).alias("_cnt"))
         .localCheckpoint(eager=False)
     )
-    cuts = S.range_cut_points(g, "v", 64, sample_rows=4096)
+    cuts = S.range_cut_points(g, "v")
     pre = S.ordered_prefix(
         g,
         [F.col("v").asc()],

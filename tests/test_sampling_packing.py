@@ -414,7 +414,11 @@ def test_ordered_prefix_descending_and_weight(spark, valued):
 def test_ordered_prefix_grouped_matches_per_group_window(spark, valued):
     from pyspark.sql import Window
 
-    g = valued.withColumn("g", (F.col("k") % 3).cast("int"))
+    # every 7th row has a NULL group: a real group to the window, so
+    # the offsets rejoin must keep its rows
+    g = valued.withColumn(
+        "g", F.when(F.col("k") % 7 == 0, F.lit(None)).otherwise(F.col("k") % 3).cast("int")
+    )
     cuts = S.range_cut_points(g, "v", n_buckets=8)
     out = S.ordered_prefix(
         g,
@@ -422,7 +426,6 @@ def test_ordered_prefix_grouped_matches_per_group_window(spark, valued):
         S.range_bucket(F.col("v"), cuts),
         group_cols=["g"],
         out_pos="r",
-        broadcast_offsets=False,
     )
     w = Window.partitionBy("g").orderBy("v", "k")
     naive = g.withColumn("r", F.row_number().over(w))
